@@ -4,23 +4,23 @@ what ``BENCHMARK.json`` lists; ``test_perfbench.py`` keeps the two in step.
 
 Every reported metric is defined for every workload, because each run must
 report all of them. Metrics of one workload's own layers (streaming
-progress, dedup precision, ...) go into the run record's ``layers`` section
-with the end-to-end metric they should move (``DETAIL``).
+progress, dedup precision, ...) are defined in ``DETAIL`` and go into the
+run record's ``layers`` section, each with its unit and the end-to-end
+metric it should move (``annotate``).
 """
 
 from __future__ import annotations
 
-import os
-import statistics
 from datetime import datetime, timezone
 
 from spans import self_times
+from stats import median
 
 # name -> (unit, better)
 END_TO_END = {
     "setup_s": ("s", "lower"),
     "latency_p50_s": ("s", "lower"),
-    "items_per_s": ("1/s", "higher"),
+    "cpu_ms_per_item": ("ms", "lower"),
     "peak_rss_mb": ("MB", "lower"),
 }
 
@@ -35,12 +35,12 @@ PER_LAYER = {
     "spark.jobs_per_cycle": ("count", "lower", "latency_p50_s"),
     "spark.stages_per_cycle": ("count", "lower", "latency_p50_s"),
     "spark.tasks_per_cycle": ("count", "lower", "latency_p50_s"),
-    "spark.input_bytes_per_cycle": ("bytes", "lower", "items_per_s"),
-    "spark.shuffle_write_bytes_per_cycle": ("bytes", "lower", "items_per_s"),
-    "spark.executor_run_s_per_cycle": ("s", "lower", "items_per_s"),
-    "spark.executor_cpu_s_per_cycle": ("s", "lower", "items_per_s"),
-    "spark.gc_s_per_cycle": ("s", "lower", "items_per_s"),
-    "spark.core_busy_frac": ("ratio", "higher", "items_per_s"),
+    "spark.input_bytes_per_cycle": ("bytes", "lower", "cpu_ms_per_item"),
+    "spark.shuffle_write_bytes_per_cycle": ("bytes", "lower", "cpu_ms_per_item"),
+    "spark.executor_run_s_per_cycle": ("s", "lower", "cpu_ms_per_item"),
+    "spark.executor_cpu_s_per_cycle": ("s", "lower", "cpu_ms_per_item"),
+    "spark.gc_s_per_cycle": ("s", "lower", "cpu_ms_per_item"),
+    "spark.core_busy_frac": ("ratio", "higher", "latency_p50_s"),
     "process.jvm_rss_mb": ("MB", "lower", "peak_rss_mb"),
     "process.python_rss_mb": ("MB", "lower", "peak_rss_mb"),
     "trace.overhead_frac": ("ratio", "lower", "latency_p50_s"),
@@ -50,9 +50,9 @@ PER_LAYER = {
 # Workload-specific layer metrics in the run record:
 # name -> (unit, workload, end-to-end metric it should move)
 DETAIL = {
-    "streaming.collector.route_s": ("s", "ingest", "latency_p50_s, items_per_s"),
-    "streaming.collector.stage_close_s": ("s", "ingest", "latency_p50_s, items_per_s"),
-    "streaming.collector.rollup_s": ("s", "ingest", "latency_p50_s, items_per_s"),
+    "streaming.collector.route_s": ("s", "ingest", "latency_p50_s, cpu_ms_per_item"),
+    "streaming.collector.stage_close_s": ("s", "ingest", "latency_p50_s, cpu_ms_per_item"),
+    "streaming.collector.rollup_s": ("s", "ingest", "latency_p50_s, cpu_ms_per_item"),
     "streaming.batches_per_drop": ("count", "ingest", "latency_p50_s"),
     "streaming.trigger_ms": ("ms", "ingest", "latency_p50_s"),
     "streaming.add_batch_ms": ("ms", "ingest", "latency_p50_s"),
@@ -70,27 +70,41 @@ DETAIL = {
     "sink.bytes_per_record": ("bytes", "ingest", "latency_p50_s"),
     "sources.compaction.compact_s": ("s", "ingest", "latency_p50_s"),
     "sources.compaction.bytes_rewritten_per_byte_ingested": ("ratio", "ingest", "latency_p50_s"),
-    "sources.load_tables_s": ("s", "curation", "items_per_s"),
-    "operators.dedup.exact_s": ("s", "curation", "items_per_s"),
-    "operators.dedup.minhash_lsh_s": ("s", "curation", "items_per_s"),
-    "operators.dedup.containment_banded_s": ("s", "curation", "items_per_s"),
-    "operators.pipeline.dup_groups_s": ("s", "curation", "items_per_s"),
-    "operators.pipeline.curation_v2_s": ("s", "curation", "items_per_s"),
-    "operators.similarity.embedding_dup_groups_s": ("s", "curation", "items_per_s"),
-    "operators.dedup.lsh_candidate_pairs": ("count", "curation", "items_per_s"),
-    "operators.dedup.verified_pairs": ("count", "curation", "items_per_s"),
-    "operators.dedup.lsh_precision": ("ratio", "curation", "items_per_s"),
-    "operators.dedup.repeat_call_ratio": ("ratio", "curation", "items_per_s"),
-    "operators.pipeline.cc_jobs": ("count", "curation", "items_per_s"),
-    "spark.shuffle_write_bytes_per_suite": ("bytes", "curation", "items_per_s"),
-    "spark.spill_bytes_per_suite": ("bytes", "curation", "items_per_s"),
-    "spark.tasks_per_suite": ("count", "curation", "items_per_s"),
+    "sources.load_tables_s": ("s", "curation", "latency_p50_s"),
+    "operators.dedup.exact_s": ("s", "curation", "latency_p50_s"),
+    "operators.dedup.minhash_lsh_s": ("s", "curation", "latency_p50_s"),
+    "operators.dedup.containment_banded_s": ("s", "curation", "latency_p50_s"),
+    "operators.pipeline.dup_groups_s": ("s", "curation", "latency_p50_s"),
+    "operators.pipeline.curation_v2_s": ("s", "curation", "latency_p50_s"),
+    "operators.similarity.embedding_dup_groups_s": ("s", "curation", "latency_p50_s"),
+    "operators.dedup.lsh_candidate_pairs": ("count", "curation", "cpu_ms_per_item"),
+    "operators.dedup.verified_pairs": ("count", "curation", "cpu_ms_per_item"),
+    "operators.dedup.lsh_precision": ("ratio", "curation", "cpu_ms_per_item"),
+    "operators.dedup.repeat_call_ratio": ("ratio", "curation", "latency_p50_s"),
+    "operators.pipeline.cc_jobs": ("count", "curation", "latency_p50_s"),
+    "spark.shuffle_write_bytes_per_suite": ("bytes", "curation", "cpu_ms_per_item"),
+    "spark.spill_bytes_per_suite": ("bytes", "curation", "cpu_ms_per_item"),
+    "spark.tasks_per_suite": ("count", "curation", "cpu_ms_per_item"),
+    "operators.pipeline.planted_doc_recall": ("ratio", "curation", "none: output quality"),
+    "operators.similarity.planted_vec_recall": ("ratio", "curation", "none: output quality"),
 }
 
 
-def _med(xs):
-    xs = [x for x in xs if x is not None]
-    return statistics.median(xs) if xs else None
+def annotate(layers: dict, workload: str) -> dict:
+    """Each layer metric with its unit and the end-to-end metric it should
+    move. A value that neither ``PER_LAYER`` nor ``DETAIL`` lists for
+    ``workload`` raises, and so does a listed one that is missing."""
+    spec = {k: (v[0], v[2]) for k, v in PER_LAYER.items()}
+    spec.update((k, (v[0], v[2])) for k, v in DETAIL.items() if v[1] == workload)
+    if set(layers) != set(spec):
+        raise KeyError(f"layer metrics differ from their definitions: "
+                       f"{sorted(set(layers) ^ set(spec))}")
+    return {k: {"value": v, "unit": spec[k][0], "moves": spec[k][1]}
+            for k, v in layers.items()}
+
+
+def _ms(seconds):
+    return None if seconds is None else 1e3 * seconds
 
 
 def select(values: dict, spec: dict) -> dict:
@@ -104,16 +118,11 @@ def cycle_latencies(wl, cycles: list[dict]) -> list[float]:
 
 
 def end_to_end(wl, record: dict) -> dict:
-    cycles = record["cycles"]
-    latency = _med(cycle_latencies(wl, cycles))
-    if wl.name == "ingest":
-        busy = sum(c.get(k, 0.0) for c in cycles
-                   for k in ("route_s", "stage_close_s", "rollup_s"))
-        items = sum(c["records"] for c in cycles if "route_s" in c) / busy if busy else None
-    else:
-        items = _med([c["docs"] / c["suite_s"] for c in cycles])
-    return {"setup_s": record["setup_s"], "latency_p50_s": latency,
-            "items_per_s": items, "peak_rss_mb": record["rss"]["total_mb"]}
+    items = sum(c[wl.item_key] for c in record["cycles"])
+    return {"setup_s": record["setup_s"],
+            "latency_p50_s": median(cycle_latencies(wl, record["cycles"])),
+            "cpu_ms_per_item": 1e3 * record["run_cpu_s"] / items if items else None,
+            "peak_rss_mb": record["rss"]["total_mb"]}
 
 
 def _epoch(ts: str | None) -> float | None:
@@ -158,7 +167,6 @@ def per_layer(wl, tracer, counts: dict, record: dict) -> dict:
              ("jobs", "stages", "tasks", "input_bytes", "shuffle_write_bytes",
               "spill_bytes", "executor_run_s", "executor_cpu_s", "gc_s")}
     busy_wall = sum(s.dur for s in top)
-    cores = len(os.sched_getaffinity(0))
 
     job_covered = 0.0
     for s in top:
@@ -175,8 +183,8 @@ def per_layer(wl, tracer, counts: dict, record: dict) -> dict:
         "sources.self_s_per_cycle": sum(selfs[s.id] for s in spans
                                         if s.name.startswith("sources.")) / n,
         "engine.calls_per_cycle": len(top) / n,
-        "engine.call_p50_s": _med([s.dur for s in top]),
-        "engine.plan_ms_per_call": 1e3 * _med([s.dur for s in spans if s.name.endswith(".plan")]),
+        "engine.call_p50_s": median([s.dur for s in top]),
+        "engine.plan_ms_per_call": _ms(median([s.dur for s in spans if s.name.endswith(".plan")])),
         "engine.job_free_frac": 1 - job_covered / busy_wall if busy_wall else None,
         "spark.jobs_per_cycle": total["jobs"] / n,
         "spark.stages_per_cycle": total["stages"] / n,
@@ -186,7 +194,8 @@ def per_layer(wl, tracer, counts: dict, record: dict) -> dict:
         "spark.executor_run_s_per_cycle": total["executor_run_s"] / n,
         "spark.executor_cpu_s_per_cycle": total["executor_cpu_s"] / n,
         "spark.gc_s_per_cycle": total["gc_s"] / n,
-        "spark.core_busy_frac": total["executor_run_s"] / (busy_wall * cores) if busy_wall else None,
+        "spark.core_busy_frac": total["executor_run_s"] / (busy_wall * record["task_slots"])
+        if busy_wall else None,
         "process.jvm_rss_mb": record["rss"]["jvm_mb"],
         "process.python_rss_mb": record["rss"]["python_mb"],
         "trace.overhead_frac": tracer.overhead_s / record["run_wall_s"],
@@ -202,42 +211,42 @@ def _ingest_detail(spans, record, counts, inclusive, tracer) -> dict:
     cyc = record["cycles"]
     panels = [s for s in spans if s.name == "operators.observability.stage_agg_skewness"]
     progress = [p for ps in tracer.stream_progress().values() for p in ps]
-    dur = lambda key: _med([p.get("durationMs", {}).get(key) for p in progress])  # noqa: E731
+    dur = lambda key: median([p.get("durationMs", {}).get(key) for p in progress])  # noqa: E731
     state_commit = [sum(op.get("commitTimeMs", 0) for op in p.get("stateOperators", []))
                     for p in progress if p.get("stateOperators")]
-    files = [c["sink_files"] for c in cyc if "sink_files" in c]
+    files = [c.get("sink_files_per_drop") for c in cyc]
     drop_bytes = [c["drop_bytes"] / c["records"] for c in cyc]
     return {
-        "streaming.collector.route_s": _med([c.get("route_s") for c in cyc]),
-        "streaming.collector.stage_close_s": _med([c.get("stage_close_s") for c in cyc]),
-        "streaming.collector.rollup_s": _med([c.get("rollup_s") for c in cyc]),
+        "streaming.collector.route_s": median([c.get("route_s") for c in cyc]),
+        "streaming.collector.stage_close_s": median([c.get("stage_close_s") for c in cyc]),
+        "streaming.collector.rollup_s": median([c.get("rollup_s") for c in cyc]),
         "streaming.batches_per_drop": len(progress) / max(1, len(cyc)),
         "streaming.trigger_ms": dur("triggerExecution"),
         "streaming.add_batch_ms": dur("addBatch"),
         "streaming.query_planning_ms": dur("queryPlanning"),
         "streaming.wal_commit_ms": dur("walCommit"),
-        "streaming.state_commit_ms": _med(state_commit),
-        "operators.observability.plan_ms": 1e3 * (_med([
-            s.dur for s in spans if s.name == "operators.observability.plan"]) or 0),
-        "operators.observability.exec_s": _med([
+        "streaming.state_commit_ms": median(state_commit),
+        "operators.observability.plan_ms": _ms(median([
+            s.dur for s in spans if s.name == "operators.observability.plan"])),
+        "operators.observability.exec_s": median([
             s.dur for s in spans if s.name == "operators.observability.exec"]),
-        "spark.jobs_per_panel": _med([inclusive(s, "jobs") for s in panels]),
-        "spark.stages_per_panel": _med([inclusive(s, "stages") for s in panels]),
-        "spark.tasks_per_panel": _med([inclusive(s, "tasks") for s in panels]),
-        "spark.input_bytes_per_panel": _med([inclusive(s, "input_bytes") for s in panels]),
-        "spark.shuffle_write_bytes_per_panel": _med(
+        "spark.jobs_per_panel": median([inclusive(s, "jobs") for s in panels]),
+        "spark.stages_per_panel": median([inclusive(s, "stages") for s in panels]),
+        "spark.tasks_per_panel": median([inclusive(s, "tasks") for s in panels]),
+        "spark.input_bytes_per_panel": median([inclusive(s, "input_bytes") for s in panels]),
+        "spark.shuffle_write_bytes_per_panel": median(
             [inclusive(s, "shuffle_write_bytes") for s in panels]),
-        "sink.files_per_drop": _med(files),
-        "sink.bytes_per_record": _med(drop_bytes),
-        "sources.compaction.compact_s": _med([c.get("compact_s") for c in cyc]),
-        "sources.compaction.bytes_rewritten_per_byte_ingested": _med(
+        "sink.files_per_drop": median(files),
+        "sink.bytes_per_record": median(drop_bytes),
+        "sources.compaction.compact_s": median([c.get("compact_s") for c in cyc]),
+        "sources.compaction.bytes_rewritten_per_byte_ingested": median(
             [c.get("compact_bytes_ratio") for c in cyc]),
     }
 
 
 def _curation_detail(spans, record, counts, inclusive, tracer) -> dict:
     cyc = record["cycles"]
-    calls = lambda name: _med([c["calls"].get(name) for c in cyc])  # noqa: E731
+    calls = lambda name: median([c["calls"].get(name) for c in cyc])  # noqa: E731
     by_name = lambda name: [s for s in spans if s.name == name]  # noqa: E731
     suites = {}
     for s in spans:
@@ -248,7 +257,7 @@ def _curation_detail(spans, record, counts, inclusive, tracer) -> dict:
             acc["spill"] += c.get("spill_bytes", 0)
             acc["tasks"] += c.get("tasks", 0)
     return {
-        "sources.load_tables_s": _med([c.get("load_s") for c in cyc]),
+        "sources.load_tables_s": median([c.get("load_s") for c in cyc]),
         "operators.dedup.exact_s": calls("operators.dedup.exact"),
         "operators.dedup.minhash_lsh_s": calls("operators.dedup.minhash_lsh"),
         "operators.dedup.containment_banded_s": calls("operators.dedup.containment_banded"),
@@ -256,15 +265,17 @@ def _curation_detail(spans, record, counts, inclusive, tracer) -> dict:
         "operators.pipeline.curation_v2_s": calls("operators.pipeline.curation_v2"),
         "operators.similarity.embedding_dup_groups_s":
             calls("operators.similarity.embedding_dup_groups"),
-        "operators.dedup.lsh_candidate_pairs": _med([c.get("lsh_candidate_pairs") for c in cyc]),
-        "operators.dedup.verified_pairs": _med([c.get("verified_pairs") for c in cyc]),
-        "operators.dedup.lsh_precision": _med([c.get("lsh_precision") for c in cyc]),
-        "operators.dedup.repeat_call_ratio": _med([c.get("repeat_call_ratio") for c in cyc]),
-        "operators.pipeline.cc_jobs": _med(
+        "operators.dedup.lsh_candidate_pairs": median([c.get("lsh_candidate_pairs") for c in cyc]),
+        "operators.dedup.verified_pairs": median([c.get("verified_pairs") for c in cyc]),
+        "operators.dedup.lsh_precision": median([c.get("lsh_precision") for c in cyc]),
+        "operators.dedup.repeat_call_ratio": median([c.get("repeat_call_ratio") for c in cyc]),
+        "operators.pipeline.cc_jobs": median(
             [inclusive(s, "jobs") for s in by_name("operators.pipeline.dup_groups")]),
-        "spark.shuffle_write_bytes_per_suite": _med([a["shuffle"] for a in suites.values()]),
-        "spark.spill_bytes_per_suite": _med([a["spill"] for a in suites.values()]),
-        "spark.tasks_per_suite": _med([a["tasks"] for a in suites.values()]),
-        "planted_doc_recall": _med([c.get("planted_doc_recall") for c in cyc]),
-        "planted_vec_recall": _med([c.get("planted_vec_recall") for c in cyc]),
+        "spark.shuffle_write_bytes_per_suite": median([a["shuffle"] for a in suites.values()]),
+        "spark.spill_bytes_per_suite": median([a["spill"] for a in suites.values()]),
+        "spark.tasks_per_suite": median([a["tasks"] for a in suites.values()]),
+        "operators.pipeline.planted_doc_recall":
+            median([c.get("planted_doc_recall") for c in cyc]),
+        "operators.similarity.planted_vec_recall":
+            median([c.get("planted_vec_recall") for c in cyc]),
     }

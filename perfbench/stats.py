@@ -25,10 +25,12 @@ def tail(values: list[float]) -> dict | None:
     }
 
 
+def median(values) -> float | None:
+    """Median of the values that are not ``None``; ``None`` when there are none."""
+    xs = [x for x in values if x is not None]
+    return statistics.median(xs) if xs else None
+
+
 def summary(values: list[float]) -> dict:
     """Median and supported tail of ``values``, always stating ``n``."""
-    return {
-        "n": len(values),
-        "p50": statistics.median(values) if values else None,
-        "tail": tail(values),
-    }
+    return {"n": len(values), "p50": median(values), "tail": tail(values)}

@@ -91,9 +91,13 @@ class _FakeCollector:
         self.calls += 1
         if self.calls == 1:
             time.sleep(self.stall_s)
-        ev = self.wl.landed_events[-1]
-        return _Rows([{"metrics_type": k, "n_records": v}
-                      for k, v in gen.route_counts(ev).items()])
+        # The routing summary counts the whole sink; compaction, which
+        # would start a new one, is stubbed out.
+        routes = {"logs": 0, "taskMetrics": 0}
+        for ev in self.wl.landed_events:
+            for k, v in gen.route_counts(ev).items():
+                routes[k] += v
+        return _Rows([{"metrics_type": k, "n_records": v} for k, v in routes.items()])
 
     def run_streaming_stage_agg(self, spark, drop_dir, out_dir):
         return _Rows([{"n_tasks": workloads.DROP_RECORDS}])
@@ -158,3 +162,28 @@ def test_exits_nonzero_without_the_package(tmp_path):
         cwd=dst, capture_output=True, text=True, timeout=120)
     assert proc.returncode != 0
     assert proc.stdout.strip() == ""
+
+
+class _NoSpans:
+    spans: list = []
+    overhead_s = 0.0
+
+    def epoch(self, perf):
+        return perf
+
+    def stream_progress(self):
+        return {}
+
+
+@pytest.mark.parametrize("workload, cycle", [
+    ("ingest", {"freshness_s": 1.0, "records": 10, "drop_bytes": 100}),
+    ("curation", {"suite_s": 1.0, "docs": 10, "calls": {}}),
+])
+def test_layer_metrics_match_their_definitions(workload, cycle):
+    record = {"cycles": [cycle], "get_spark_s": 1.0, "run_wall_s": 2.0, "task_slots": 2,
+              "rss": {"jvm_mb": 1.0, "python_mb": 1.0}}
+    wl = type("W", (), {"name": workload})()
+    layers = metrics.annotate(metrics.per_layer(wl, _NoSpans(), {}, record), workload)
+    assert set(layers) == set(metrics.PER_LAYER) | {
+        k for k, v in metrics.DETAIL.items() if v[1] == workload}
+    assert layers["session.get_spark_s"] == {"value": 1.0, "unit": "s", "moves": "setup_s"}

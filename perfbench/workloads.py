@@ -8,7 +8,8 @@ outside, one cycle at a time, and checks the outputs.
             files are compacted into a new directory and swapped in. A
             drop's latency (freshness) runs from its due time, so a stall
             delays the drops behind it. A collector is a long-running
-            process, so one small drop through every call warms it first.
+            process, so one drop through every call warms it first.
+            The routed sink is compacted every ``COMPACT_EVERY`` drops.
 ``curation`` closed loop, 1 client: each cycle generates a fresh seeded
             corpus and runs the nightly suite over it (dedup, dup groups,
             curation funnel, embedding dup groups). The suite first runs
@@ -24,16 +25,18 @@ import shutil
 import time
 
 import gen
+from stats import median
 
 PKG = "guidance_for_analytics_observability_on_aws_spark"
 
 DROP_RECORDS = 25_000
 DROP_SPAN_US = 3_600_000_000  # each drop covers one hour of event time
-# Just longer than one drop's cycle on a 4-core host, so the offered rate
-# sits just below what the collector sustains there.
-INGEST_INTERVAL_S = 12.0
-CORPUS_DOCS = 1_000
-WARMUP_DROPS = 2
+# About 1.5x one drop's cycle on a 4-core host: a slower host or a slower
+# build still keeps up, so a drop's freshness is its own cycle, not a
+# backlog that grows with the run's length.
+INGEST_INTERVAL_S = 10.0
+COMPACT_EVERY = 2
+CORPUS_DOCS = 500
 
 
 class Failures:
@@ -57,6 +60,7 @@ def _sorted_rows(rows) -> list[tuple]:
 
 class Ingest:
     name = "ingest"
+    item_key = "records"
 
     def __init__(self, work: str, seed: int):
         self.work, self.seed = work, seed
@@ -65,6 +69,7 @@ class Ingest:
         self.comp_dirs: list[str] = []
         self.landed_events = []
         self.route_truth = {"logs": 0, "taskMetrics": 0}
+        self.gen_truth = {"logs": 0, "taskMetrics": 0}  # routed into the live sink
 
     # -- inputs ----------------------------------------------------------
     def _drop_events(self, i: int):
@@ -87,19 +92,17 @@ class Ingest:
         self.compaction = import_module(f"{PKG}.sources.compaction")
         self.telemetry = import_module(f"{PKG}.sources.telemetry")
         self.spark, self.tracer = spark, tracer
-        # Warm-up: drops of their own through every call. One is not enough:
-        # the first measured drop was still 10-30% slower than the second.
-        for k in range(WARMUP_DROPS):
-            ev = gen.events_table(self.seed, DROP_RECORDS, stream=10_000 + k)
-            w = f"{self.work}/warmup/{k}"
-            d = self._land(f"{w}/land", 0, ev)
-            self.col.run_collector_pipeline(spark, f"{w}/land", out_dir=f"{w}/sink").collect()
-            self.col.run_streaming_stage_agg(spark, d, out_dir=f"{w}/stage").collect()
-            self.col.run_windowed_rollup(spark, d).collect()
-            routed = spark.read.parquet(f"{w}/sink/routed")
-            self.obs.stage_agg_skewness(routed).collect()
-            self.compaction.compact_dataset(spark, f"{w}/sink/routed", f"{w}/comp",
-                                            partition_cols=["metrics_type"])
+        # Warm-up: one drop of its own through every call.
+        ev = gen.events_table(self.seed, DROP_RECORDS, stream=10_000)
+        w = f"{self.work}/warmup"
+        d = self._land(f"{w}/land", 0, ev)
+        self.col.run_collector_pipeline(spark, f"{w}/land", out_dir=f"{w}/sink").collect()
+        self.col.run_streaming_stage_agg(spark, d, out_dir=f"{w}/stage").collect()
+        self.col.run_windowed_rollup(spark, d).collect()
+        routed = spark.read.parquet(f"{w}/sink/routed")
+        self.obs.stage_agg_skewness(routed).collect()
+        self.compaction.compact_dataset(spark, f"{w}/sink/routed", f"{w}/comp",
+                                        partition_cols=["metrics_type"])
 
     def _sink_frame(self):
         from functools import reduce
@@ -114,14 +117,15 @@ class Ingest:
         tr = self.tracer
         i = 0
         while True:
-            due = t0 + i * INGEST_INTERVAL_S
-            if due - t0 >= seconds:
+            offset = i * INGEST_INTERVAL_S
+            if offset >= seconds:
                 break
+            due = t0 + offset
             now = time.perf_counter()
             if now < due:
                 time.sleep(due - now)
             tr.cycle = i
-            rec = {"cycle": i, "due_s": due - t0}
+            rec = {"cycle": i, "due_s": offset}
             with tr.span("bench.generate_drop"):
                 ev = self._drop_events(i)
                 land = f"{self.work}/land/g{self.gen_id}"
@@ -129,10 +133,12 @@ class Ingest:
             rec["landed_s"] = time.perf_counter() - t0
             rec["generator_late_s"] = max(0.0, time.perf_counter() - due)
             rec["drop_bytes"] = os.path.getsize(f"{drop_dir}/events.parquet")
-            truth = gen.route_counts(ev)
             self.landed_events.append(ev)
-            for k, v in truth.items():
+            for k, v in gen.route_counts(ev).items():
                 self.route_truth[k] += v
+                self.gen_truth[k] += v
+            # The routing summary counts the whole live sink.
+            truth = dict(self.gen_truth)
             try:
                 sink = f"{self.work}/sink/g{self.gen_id}"
                 fails.attempted += 1
@@ -165,9 +171,11 @@ class Ingest:
                 total = sum(self.route_truth.values())
                 fails.check(sum(r["n_tasks"] for r in rows) == total,
                             f"drop {i}: panel does not include the drop")
-                rec["sink_files"] = _count_parquet(f"{sink}/routed")
-                fails.attempted += 1
-                self._compact(rec)
+                rec["sink_files_per_drop"] = (_count_parquet(f"{sink}/routed")
+                                              / (i % COMPACT_EVERY + 1))
+                if (i + 1) % COMPACT_EVERY == 0:
+                    fails.attempted += 1
+                    self._compact(rec)
             except Exception as exc:  # a failed call is a failed op, the run goes on
                 fails.check(False, f"drop {i}: {type(exc).__name__}: {exc}"[:300])
             rec["records"] = DROP_RECORDS
@@ -176,6 +184,8 @@ class Ingest:
         return self.drops
 
     def _compact(self, rec: dict) -> None:
+        """Compact the live sink into a new directory and retire it, so the
+        next drop starts a new sink with its own checkpoints."""
         src = f"{self.work}/sink/g{self.gen_id}/routed"
         dst = f"{self.work}/comp/g{self.gen_id}"
         in_bytes = sum(os.path.getsize(f"{self.work}/land/g{self.gen_id}/{d}/events.parquet")
@@ -187,6 +197,7 @@ class Ingest:
         self.comp_dirs.append(dst)
         shutil.rmtree(f"{self.work}/sink/g{self.gen_id}")
         self.gen_id += 1
+        self.gen_truth = {"logs": 0, "taskMetrics": 0}
 
     def final_check(self, fails: Failures) -> None:
         """The sink's per-route totals equal the generator's, and the panel
@@ -208,13 +219,15 @@ class Ingest:
 
     def props(self) -> dict:
         return {"drop_records": DROP_RECORDS, "interval_s": INGEST_INTERVAL_S,
-                "drop_bytes_p50": _median([d.get("drop_bytes", 0) for d in self.drops]),
+                "compact_every": COMPACT_EVERY,
+                "drop_bytes_p50": median([d.get("drop_bytes", 0) for d in self.drops]),
                 "sink_bytes": sum(self.compaction.dataset_bytes(d) for d in self.comp_dirs)
                 if self.comp_dirs else 0}
 
 
 class Curation:
     name = "curation"
+    item_key = "docs"
 
     def __init__(self, work: str, seed: int):
         self.work, self.seed = work, seed
@@ -260,8 +273,7 @@ class Curation:
         i = 0
         while True:
             # A corpus starts only when the previous one's time says it can
-            # finish inside the window, so the count does not flip between
-            # runs whose suites take about the window.
+            # finish inside the window.
             elapsed = time.perf_counter() - t0
             if self.corpora and elapsed + self.corpora[-1]["cycle_s"] > seconds:
                 break
@@ -328,6 +340,7 @@ class Curation:
                 con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{d}/{t}.parquet')")
             for name, key in [("operators.dedup.exact", "dedup_exact"),
                               ("operators.dedup.minhash_lsh", "dedup_minhash_lsh")]:
+                fails.attempted += 1
                 cur = con.execute(oracles[key])
                 cols = [c[0] for c in cur.description]
                 want = sorted(tuple(r[cols.index(c)] for c in sorted(cols)) for r in cur.fetchall())
@@ -360,12 +373,6 @@ def _recall(clusters: list[list[int]], found_csv: list[str]) -> float | None:
 
 def _count_parquet(path: str) -> int:
     return sum(1 for _r, _d, fs in os.walk(path) for f in fs if f.endswith(".parquet"))
-
-
-def _median(xs):
-    import statistics
-
-    return statistics.median(xs) if xs else None
 
 
 WORKLOADS = {"ingest": Ingest, "curation": Curation}
