@@ -10,13 +10,14 @@ Scale posture:
 - Split/sample/pack are all hash- or window-based per-row arithmetic over a
   single shuffle keyed by a bounded-cardinality column (``source``) — no
   driver-side state, no skewable joins.
-- ``dup_groups`` is the one genuinely iterative operator: min-label
-  propagation over the candidate-pair graph. The edge list is the OUTPUT of
-  LSH banding (orders of magnitude smaller than the corpus), each iteration
-  is one self-join + aggregation on that small edge set, and convergence is
-  bounded by component diameter (tiny for dup clusters — dups of a doc are
-  dups of each other). Lineage is truncated per iteration with
-  ``localCheckpoint`` so plans stay flat.
+- ``dup_groups`` is the one genuinely iterative operator: connected
+  components over the candidate-pair graph (:func:`dup_labels`, the ONE
+  CC implementation every dup-group consumer shares). The edge list is
+  the OUTPUT of LSH banding (orders of magnitude smaller than the
+  corpus); at or under ``DRIVER_CC_EDGE_MAX`` edges it is collected and
+  resolved by a driver union-find, above it by large-star/small-star
+  rounds over the edge list (O(log diameter) rounds, lineage truncated
+  per round with ``localCheckpoint``).
 
 Every op is engine-portable-exact: md5-derived hash buckets, BIGINT token
 arithmetic, and ASCII-ordered hex-string sampling keys reproduce
@@ -41,44 +42,27 @@ SAMPLE_PER_STRATUM = 50
 #: context window (tokens) for sequence packing.
 PACK_CONTEXT = 512
 
-#: target edge rows per partition in the CC loops (~100 MB of (src,dst)
-#: pairs). Drives the DERIVED partition count below — a fixed constant
-#: would be wrong at 100 TB, where the LSH candidate list is itself large.
+#: target edge rows per partition in the distributed CC loop (~100 MB of
+#: (u, v) pairs). Drives the DERIVED partition count in :func:`dup_labels`
+#: — a fixed constant would be wrong at 100 TB, where the LSH candidate
+#: list is itself large.
 CC_EDGE_ROWS_PER_PARTITION = 1_000_000
 
 #: Edge-count gate for the driver union-find fast path in
-#: :func:`dup_labels_star` — the broadcast-join analogy: below it the
+#: :func:`dup_labels` — the broadcast-join analogy: below it the
 #: DISTINCT edge list is a few MB (2 BIGINTs/row ≈ 3 MB at the gate), and
 #: one collect + linear union-find replaces ~10 shuffle stages PER STAR
 #: ROUND whose fixed overhead dominates at small sizes (measured: the
 #: 718-edge sf0.1 graph spent 5.1 s in 2 distributed rounds vs ~0.1 s
 #: collected). Above the gate the O(log d) star loop engages unchanged —
 #: that is the 100 TB path; this is the same size-dispatched physical
-#: strategy Spark itself applies to joins.
+#: strategy Spark itself applies to joins. 0 disables the driver path.
 DRIVER_CC_EDGE_MAX = 200_000
 
-
-def _cc_partitions(n_edges: int, floor: int = 8) -> int:
-    """The ONE size-derived partition rule for the CC loops:
-    ``max(floor, ⌈n_edges / CC_EDGE_ROWS_PER_PARTITION⌉)`` — shared by
-    :func:`_edge_coalesce` (min-label P4) and :func:`dup_labels_star`
-    (which materializes earlier for its driver-dispatch gate), so a
-    tuning reaches both."""
-    return max(floor, -(-n_edges // CC_EDGE_ROWS_PER_PARTITION))
-
-
-def _edge_coalesce(edges: DataFrame, floor: int = 8) -> DataFrame:
-    """Materialize the CC edge list and coalesce it to a partition count
-    derived from its ACTUAL size (:func:`_cc_partitions`), never more
-    than the checkpointed partitioning (coalesce is narrow — it cannot
-    grow).
-
-    The checkpoint runs first at the upstream (LSH-output) partitioning,
-    so the count that sizes the loop is a cheap scan of materialized
-    blocks, not a recompute of the MinHash job; the per-round tasks then
-    scale with the edge list instead of a hard-coded 8."""
-    ckpt = edges.localCheckpoint(eager=True)
-    return ckpt.coalesce(_cc_partitions(ckpt.count(), floor))
+#: Round cap of the distributed star loop. Star rounds converge in
+#: O(log n) rounds in practice (Kiveris et al.), so 30 is ample slack;
+#: hitting the cap raises instead of emitting split groups.
+CC_MAX_ROUNDS = 30
 
 
 def train_val_split(documents: DataFrame) -> DataFrame:
@@ -157,108 +141,190 @@ def pack_sequences(documents: DataFrame) -> DataFrame:
     )
 
 
-def dup_groups(documents: DataFrame, max_iter: int = 50) -> DataFrame:
-    """P4: transitive duplicate groups — connected components over the
-    MinHash-LSH candidate graph (D3's output).
-
-    Iterative min-label propagation: every vertex repeatedly takes the
-    minimum label among itself and its neighbors until fixpoint. Converges
-    in <= diameter iterations; duplicate clusters are near-cliques so this
-    is 2-3 rounds in practice. Each round is one join edge->label + one
-    groupBy on the (small) edge list, with ``localCheckpoint`` truncating
-    lineage so the plan does not grow with iterations — the standard
-    scalable CC formulation when components are small (the dup-cluster
-    regime); large-diameter graphs would use large-star/small-star.
-    """
+def _group_summary(
+    labels: DataFrame, n_col: str = "n_docs", ids_col: str = "doc_ids"
+) -> DataFrame:
+    """One row per multi-member component of a (src, group_id) label
+    table: member count and the sorted member-id CSV — the summary P4,
+    P19 and D16 all emit (their oracles share the same shape)."""
     return (
-        dup_labels(documents, max_iter)
-        .groupBy("group_id")
+        labels.groupBy("group_id")
         .agg(
-            F.count(F.lit(1)).alias("n_docs"),
+            F.count(F.lit(1)).alias(n_col),
             F.array_join(
                 F.sort_array(F.collect_list("src")).cast("array<string>"), ","
-            ).alias("doc_ids"),
+            ).alias(ids_col),
         )
-        .filter(F.col("n_docs") >= 2)
+        .filter(F.col(n_col) >= 2)
     )
+
+
+def dup_groups(documents: DataFrame) -> DataFrame:
+    """P4: transitive duplicate groups — connected components over the
+    MinHash-LSH candidate graph (D3's output), labelled by
+    :func:`dup_labels` (every member carries its component minimum), one
+    row per group of two or more documents."""
+    return _group_summary(dup_labels(documents))
+
+
+def _dup_labels_driver(spark, rows, utype: str) -> DataFrame:
+    """Union-find over a COLLECTED (u, v) edge list — the sub-gate fast
+    path of :func:`dup_labels`. Union-by-MIN-root with path
+    compression, so every find lands on the component MINIMUM: the label
+    algebra is identical to the star fixpoint (src → component min;
+    roots label themselves). Output row set is deterministic (set
+    semantics — collect order cannot matter). The explicit schema types
+    the empty edge list too (there is no row to infer it from)."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for r in rows:
+        u, v = r[0], r[1]
+        if u not in parent:
+            parent[u] = u
+        if v not in parent:
+            parent[v] = v
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            if ru < rv:
+                parent[rv] = ru
+            else:
+                parent[ru] = rv
+    labels = [(x, find(x)) for x in parent]
+    schema = f"src {utype}, group_id {utype}"
+    if utype == "bigint":
+        # Arrow-batched local-rows path (~4x faster than the row-at-a-
+        # time tuple converter, measured r15) — ids are bigint for every
+        # production caller; other id types fall through to the generic
+        # converter below.
+        import pandas as pd
+
+        return spark.createDataFrame(
+            pd.DataFrame(labels, columns=["src", "group_id"]).astype("int64"),
+            schema,
+        )
+    return spark.createDataFrame(labels, schema)
 
 
 def dup_labels(
-    documents: DataFrame, max_iter: int = 50, pairs: DataFrame | None = None
+    documents: DataFrame | None, pairs: DataFrame | None = None
 ) -> DataFrame:
-    """(doc_id=src, group_id) membership labels for every doc that appears
-    in the MinHash-LSH candidate graph — the converged min-label state P4
-    summarizes and P5's curation pipeline consumes.
+    """(src, group_id) membership labels for every doc that appears in
+    the candidate-pair graph, ``group_id`` = its component's minimum id —
+    the ONE connected-components implementation: P4/P19/D16 summarize it,
+    the curation funnels (P5/P11/P27) and P10's leak-proof split consume
+    it, and the incremental fold (P19/P23) runs it over contracted graphs.
 
-    ``pairs`` lets a caller that ALSO needs the candidate pairs (P10's
-    cross-split audit) compute the expensive MinHash/LSH job once and
-    share it, instead of the label pass re-deriving it.
+    ``pairs`` (doc_a, doc_b) lets a caller that already holds an edge
+    list (P10's cross-split audit, the banded or embedding pair graphs)
+    share it; by default the edges are D3's MinHash-LSH candidates over
+    ``documents``.
+
+    Physical dispatch: when the DISTINCT canonical edge list is at or
+    under :data:`DRIVER_CC_EDGE_MAX`, the labels come from a driver
+    union-find over the collected list — microseconds instead of ~10
+    shuffle stages per round whose fixed overhead dominates at small
+    sizes. Above the gate (the 100 TB path) runs LARGE-STAR /
+    SMALL-STAR (Kiveris et al., "Connected Components in MapReduce and
+    Beyond"), which converges in O(log d) rounds because every round
+    REWIRES edges toward component minima instead of diffusing labels one
+    hop:
+
+    - large-star: for each center u, connect every LARGER neighbor
+      directly to ``m = min(N(u) ∪ {u})``;
+    - small-star: connect every smaller-or-equal neighbor (and u) to m.
+
+    Each round is one groupBy-min + one join over the EDGE LIST only
+    (never the corpus), lineage truncated per round; convergence is the
+    exact fixpoint (edge set stable — no checksum shortcuts; checked in
+    ONE action: the two-sided exceptAll union short-circuits at the first
+    differing row via isEmpty's take-1). At the fixpoint every non-root
+    points directly at its component minimum, which IS the label table.
+    A loop still changing after :data:`CC_MAX_ROUNDS` rounds raises
+    rather than emit split groups. Equality of the two physical paths is
+    pinned in tests.
     """
     if pairs is None:
         pairs = dedup_minhash_lsh(documents).select("doc_a", "doc_b")
-    # The edge list is the LSH OUTPUT — small relative to the corpus but
-    # not fixed-size; partition it by its measured row count so each
-    # propagation round schedules size-proportional tasks (8 at sf0.1,
-    # hundreds at 100 TB) instead of a hard-coded handful.
-    edges = _edge_coalesce(
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
+    canon = (
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+        .distinct()
+        .localCheckpoint(eager=True)
     )
-    # init: label(v) = min(v, min neighbor) — one propagation round for
-    # free. NOT checkpointed: it is one tiny groupBy over the checkpointed
-    # edge list, so recomputing it inside the convergence probe (and in the
-    # caller's final aggregation when the probe converges immediately — the
-    # common near-clique case) is cheaper than an extra materialization job.
-    labels = (
-        edges.groupBy("src")
-        .agg(F.min("dst").alias("nbr_min"))
-        .select("src", F.least(F.col("src"), F.col("nbr_min")).alias("group_id"))
-    )
-    for it in range(max_iter + 1):
-        nbr = (
-            edges.join(labels.withColumnRenamed("src", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.min("group_id").alias("nbr_group"))
+    if DRIVER_CC_EDGE_MAX:
+        # take(gate+1) doubles as the size probe AND the collect: when it
+        # comes back short, those rows ARE the whole edge list (one job
+        # instead of count + collect); an overflow costs one truncated
+        # scan of the checkpoint before the distributed loop takes over.
+        head = canon.take(DRIVER_CC_EDGE_MAX + 1)
+        if len(head) <= DRIVER_CC_EDGE_MAX:
+            return _dup_labels_driver(
+                canon.sparkSession, head, canon.schema[0].dataType.simpleString()
+            )
+    # Size-derived partitioning, reused for every star round — rounds
+    # only shrink the edge set, so the initial count is a safe bound.
+    n_edges = canon.count()
+    edges = canon.coalesce(max(8, -(-n_edges // CC_EDGE_ROWS_PER_PARTITION)))
+    n_parts = edges.rdd.getNumPartitions()
+
+    def _sym(e: DataFrame) -> DataFrame:
+        return e.unionByName(
+            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
-        # Convergence probe BEFORE materializing: dup clusters are
-        # near-cliques, so the free init round usually already converged —
-        # in that common case this is the loop's ONLY job (a count over the
-        # tiny joined edge list), with no checkpoint write and no second
-        # label table. Deliberate tradeoff: a round that DOES improve
-        # re-evaluates the (tiny, checkpointed-input) nbr join once more
-        # when materializing — cheaper than taxing the common converged
-        # round with an nbr checkpoint job.
-        changed = (
-            labels.join(nbr, "src")
-            .filter(F.col("nbr_group") < F.col("group_id"))
-            .count()
+
+    def _star(e: DataFrame, large: bool) -> DataFrame:
+        sym = _sym(e)
+        mins = sym.groupBy("u").agg(F.min("v").alias("nbr_min"))
+        m = F.least(F.col("u"), F.col("nbr_min"))
+        withm = sym.join(mins, "u").select("u", "v", m.alias("m"))
+        cond = F.col("v") > F.col("u") if large else F.col("v") <= F.col("u")
+        out = withm.filter(cond).select(F.col("v").alias("u"), F.col("m").alias("v"))
+        if not large:
+            out = out.unionByName(withm.select("u", F.col("m").alias("v")))
+        return (
+            out.filter(F.col("u") != F.col("v"))
+            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+            .distinct()
+            .coalesce(n_parts)
         )
-        if changed == 0:
+
+    for it in range(CC_MAX_ROUNDS + 1):
+        new_edges = _star(_star(edges, large=True), large=False).localCheckpoint(
+            eager=True
+        )
+        # exact set equality in ONE action: isEmpty is a take(1), so a
+        # non-converged round stops at the first differing row instead of
+        # fully counting both exceptAll sides.
+        stable = (
+            new_edges.exceptAll(edges)
+            .unionAll(edges.exceptAll(new_edges))
+            .isEmpty()
+        )
+        edges = new_edges
+        if stable:
             break
-        if it == max_iter:
-            # Non-convergence must FAIL, not silently emit split groups:
-            # the oracles compute the full transitive closure, so a
-            # diameter > max_iter component would hash-mismatch anyway —
-            # loudly is better. Unreachable for dup graphs in practice
-            # (diameter ≈ cluster width), reachable only adversarially.
+        if it == CC_MAX_ROUNDS:
             raise RuntimeError(
-                f"dup_labels: min-label propagation still improving after "
-                f"{max_iter} iterations ({changed} labels changed) — "
-                "component diameter exceeds max_iter; raise max_iter or "
-                "switch to large-star/small-star for this graph"
+                f"dup_labels: edge set still changing after {CC_MAX_ROUNDS} "
+                "star rounds — pathological input"
             )
-        labels = (
-            labels.join(nbr, "src", "left")
-            .select(
-                "src",
-                F.least(
-                    F.col("group_id"),
-                    F.coalesce(F.col("nbr_group"), F.col("group_id")),
-                ).alias("group_id"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return labels
+    # fixpoint: (u, v) with v = component min for every non-root u; roots
+    # label themselves.
+    non_roots = edges.select(F.col("u").alias("src"), F.col("v").alias("group_id"))
+    root_rows = (
+        edges.select(F.col("v").alias("src"))
+        .distinct()
+        .join(non_roots.select("src"), "src", "left_anti")
+        .select("src", F.col("src").alias("group_id"))
+    )
+    return non_roots.unionByName(root_rows)
 
 
 def curation_pipeline(documents: DataFrame) -> DataFrame:
@@ -904,200 +970,9 @@ def vocab_coverage(documents: DataFrame, distributed: bool = False) -> DataFrame
     )
 
 
-def _dup_labels_driver(spark, rows, utype: str) -> DataFrame:
-    """Union-find over a COLLECTED (u, v) edge list — the sub-gate fast
-    path of :func:`dup_labels_star`. Union-by-MIN-root with path
-    compression, so every find lands on the component MINIMUM: the label
-    algebra is identical to the star fixpoint (src → component min;
-    roots label themselves). Output row set is deterministic (set
-    semantics — collect order cannot matter)."""
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for r in rows:
-        u, v = r[0], r[1]
-        if u not in parent:
-            parent[u] = u
-        if v not in parent:
-            parent[v] = v
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            if ru < rv:
-                parent[rv] = ru
-            else:
-                parent[ru] = rv
-    labels = [(x, find(x)) for x in parent]
-    if utype == "bigint":
-        # Arrow-batched local-rows path (~4x faster than the row-at-a-
-        # time tuple converter, measured r15) — ids are bigint for every
-        # production caller; other id types fall through to the generic
-        # converter below.
-        import pandas as pd
-
-        return spark.createDataFrame(
-            pd.DataFrame(labels, columns=["src", "group_id"]).astype("int64")
-        )
-    return spark.createDataFrame(
-        labels, f"src {utype}, group_id {utype}"
-    )
-
-
-def dup_labels_star(
-    documents: DataFrame | None,
-    max_iter: int = 30,
-    pairs: DataFrame | None = None,
-    driver_max_edges: int | None = DRIVER_CC_EDGE_MAX,
-    pairs_distinct: bool = False,
-) -> DataFrame:
-    """(src, group_id) labels via LARGE-STAR / SMALL-STAR connected
-    components (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — the arbitrary-diameter CC :func:`dup_labels`'s docstring
-    defers to.
-
-    Min-label propagation needs ~diameter rounds; alternating star
-    rounds converge in O(log d) because every round REWIRES edges toward
-    component minima instead of diffusing labels one hop:
-
-    - large-star: for each center u, connect every LARGER neighbor
-      directly to ``m = min(N(u) ∪ {u})``;
-    - small-star: connect every smaller-or-equal neighbor (and u) to m.
-
-    Each round is one groupBy-min + one join over the EDGE LIST only
-    (never the corpus), lineage truncated per round; convergence is the
-    exact fixpoint (edge set stable — no checksum shortcuts; checked in
-    ONE action: the two-sided exceptAll union short-circuits at the first
-    differing row via isEmpty's take-1). At the fixpoint every non-root
-    points directly at its component minimum, which IS the label table.
-
-    Physical dispatch (r14): when the DISTINCT canonical edge list is at
-    or under ``driver_max_edges`` (the size is already measured for the
-    partition derivation), the labels come from a driver union-find over
-    the collected list instead — identical output, microseconds instead
-    of ~10 shuffle stages per round whose fixed overhead dominates at
-    small sizes. The distributed loop is the 100 TB path and engages
-    unchanged above the gate (pass ``driver_max_edges=0`` to force it —
-    the equality of the two paths is pinned in tests).
-    """
-    if pairs is None:
-        pairs = dedup_minhash_lsh(documents).select("doc_a", "doc_b")
-    if pairs_distinct:
-        # r15: the caller guarantees a DISTINCT, consistently-oriented,
-        # already-materialized pair list (the nightly loop checkpoints
-        # its delta edges for the report count anyway) — the orientation
-        # flip is a free projection and the dedup shuffle + second
-        # checkpoint would re-do work the caller just did.
-        canon = pairs.select(
-            F.greatest("doc_a", "doc_b").alias("u"),
-            F.least("doc_a", "doc_b").alias("v"),
-        ).filter(F.col("u") != F.col("v"))
-    else:
-        canon = (
-            pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .select(
-                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-    if driver_max_edges:
-        # take(gate+1) doubles as the size probe AND the collect: when it
-        # comes back short, those rows ARE the whole edge list (one job
-        # instead of count + collect); an overflow costs one truncated
-        # scan of the checkpoint before the distributed loop takes over.
-        head = canon.take(driver_max_edges + 1)
-        if len(head) <= driver_max_edges:
-            return _dup_labels_driver(
-                canon.sparkSession, head, canon.schema[0].dataType.simpleString()
-            )
-    n_edges = canon.count()
-    # Size-derived partitioning (the shared _cc_partitions rule): reused
-    # for every star round — rounds only shrink the edge set, so the
-    # initial count is a safe upper bound.
-    edges = canon.coalesce(_cc_partitions(n_edges))
-    n_parts = edges.rdd.getNumPartitions()
-
-    def _sym(e: DataFrame) -> DataFrame:
-        return e.unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-
-    def _star(e: DataFrame, large: bool) -> DataFrame:
-        sym = _sym(e)
-        mins = sym.groupBy("u").agg(F.min("v").alias("nbr_min"))
-        m = F.least(F.col("u"), F.col("nbr_min"))
-        withm = sym.join(mins, "u").select("u", "v", m.alias("m"))
-        cond = F.col("v") > F.col("u") if large else F.col("v") <= F.col("u")
-        out = withm.filter(cond).select(F.col("v").alias("u"), F.col("m").alias("v"))
-        if not large:
-            out = out.unionByName(withm.select("u", F.col("m").alias("v")))
-        return (
-            out.filter(F.col("u") != F.col("v"))
-            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-            .distinct()
-            .coalesce(n_parts)
-        )
-
-    for it in range(max_iter + 1):
-        new_edges = _star(_star(edges, large=True), large=False).localCheckpoint(
-            eager=True
-        )
-        # exact set equality in ONE action: isEmpty is a take(1), so a
-        # non-converged round stops at the first differing row instead of
-        # fully counting both exceptAll sides.
-        stable = (
-            new_edges.exceptAll(edges)
-            .unionAll(edges.exceptAll(new_edges))
-            .isEmpty()
-        )
-        edges = new_edges
-        if stable:
-            break
-        if it == max_iter:
-            raise RuntimeError(
-                f"dup_labels_star: edge set still changing after {max_iter} "
-                "rounds — pathological input; raise max_iter"
-            )
-    # fixpoint: (u, v) with v = component min for every non-root u; roots
-    # label themselves.
-    non_roots = edges.select(F.col("u").alias("src"), F.col("v").alias("group_id"))
-    root_rows = (
-        edges.select(F.col("v").alias("src"))
-        .distinct()
-        .join(non_roots.select("src"), "src", "left_anti")
-        .select("src", F.col("src").alias("group_id"))
-    )
-    return non_roots.unionByName(root_rows)
-
-
-def dup_groups_star(documents: DataFrame, max_iter: int = 30) -> DataFrame:
-    """P15: P4's dup groups computed by the star algorithm — identical
-    output (shares P4's recursive-CTE oracle), O(log diameter) rounds at
-    any component shape. Equality with :func:`dup_groups` and the
-    log-round advantage on a planted path graph are pinned in tests."""
-    return (
-        dup_labels_star(documents, max_iter)
-        .groupBy("group_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.array_join(
-                F.sort_array(F.collect_list("src")).cast("array<string>"), ","
-            ).alias("doc_ids"),
-        )
-        .filter(F.col("n_docs") >= 2)
-    )
-
-
 def dup_labels_incremental_fold(
     prior: DataFrame,
     new_pairs: DataFrame,
-    max_iter: int = 30,
-    driver_max_rows: int | None = DRIVER_CC_EDGE_MAX,
     known_sizes: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Fold a batch of NEW edges into an existing (src, group_id) label
@@ -1107,8 +982,8 @@ def dup_labels_incremental_fold(
 
     Graph-contraction identity: every prior component collapses to its
     ROOT (its minimum id — exactly what the stored labels encode), new
-    edges are rewritten endpoint→root, and star CC (:func:`dup_labels_star`)
-    runs over the CONTRACTED graph only — whose edge count is bounded by
+    edges are rewritten endpoint→root, and :func:`dup_labels` runs
+    over the CONTRACTED graph only — whose edge count is bounded by
     the new batch's pairs, never the corpus graph. Because each root is
     its component's minimum and label order is global doc-id order, the
     merged component's minimum over {roots, new docs} equals the minimum
@@ -1122,9 +997,9 @@ def dup_labels_incremental_fold(
     new batch's docs (plus previously-isolated old docs first touched by
     a new edge) and take their labels directly.
 
-    Physical dispatch (r15, the r14 star-CC pattern one level up): when
+    Physical dispatch (r15, :func:`dup_labels`' pattern one level up): when
     BOTH the prior label table and the new edge list fit under
-    ``driver_max_rows``, the whole fold collapses to one driver
+    :data:`DRIVER_CC_EDGE_MAX`, the whole fold collapses to one driver
     union-find over their CONCATENATION — a prior (src, group_id) row
     IS an edge to the component minimum (group_id ≤ src by the label
     algebra, roots are self-edges), so union-by-min over prior rows +
@@ -1135,14 +1010,15 @@ def dup_labels_incremental_fold(
     contraction is the 100 TB path and engages unchanged above the
     gate. Driver-vs-distributed equality is pinned in tests.
     """
-    if driver_max_rows:
+    gate = DRIVER_CC_EDGE_MAX
+    if gate:
         if known_sizes is not None:
             # The caller (the nightly loop) already counted both frames
             # for its own report — when both fit, collect directly: two
             # single-job collects instead of incremental take probes
             # (which scale 1→4→16→32 partitions, ~4 jobs each, pure
             # fixed overhead at nightly-batch sizes).
-            if max(known_sizes) <= driver_max_rows:
+            if max(known_sizes) <= gate:
                 return _dup_labels_driver(
                     prior.sparkSession,
                     list(prior.select("src", "group_id").collect())
@@ -1150,12 +1026,10 @@ def dup_labels_incremental_fold(
                     prior.schema[0].dataType.simpleString(),
                 )
         else:
-            ph = prior.select("src", "group_id").take(driver_max_rows + 1)
-            if len(ph) <= driver_max_rows:
-                eh = new_pairs.select("doc_a", "doc_b").take(
-                    driver_max_rows + 1
-                )
-                if len(eh) <= driver_max_rows:
+            ph = prior.select("src", "group_id").take(gate + 1)
+            if len(ph) <= gate:
+                eh = new_pairs.select("doc_a", "doc_b").take(gate + 1)
+                if len(eh) <= gate:
                     return _dup_labels_driver(
                         prior.sparkSession,
                         list(ph) + list(eh),
@@ -1172,7 +1046,7 @@ def dup_labels_incremental_fold(
             F.coalesce("rb", "doc_b").alias("doc_b"),
         )
     )
-    relabel = dup_labels_star(None, max_iter=max_iter, pairs=contracted)
+    relabel = dup_labels(None, pairs=contracted)
     old_final = (
         prior.alias("p")
         .join(
@@ -1195,7 +1069,6 @@ def dup_labels_incremental_fold(
 def dup_groups_incremental(
     documents: DataFrame,
     corpus_boundary: int = 1_000_000,
-    max_iter: int = 30,
 ) -> DataFrame:
     """P19: P4's exact dup groups maintained INCREMENTALLY — the
     committed corpus's labels are folded with only the NEW batch's edges
@@ -1210,7 +1083,7 @@ def dup_groups_incremental(
     label table, so per-night work is bounded by the batch's edges. The
     pair split is lossless — every LSH pair is either old-old (in the
     prior labels) or touches a new doc (in the fold) — hence output ≡
-    full-recompute P4/P15 and the entry SHARES their oracle.
+    full-recompute P4 and the entry SHARES its oracle.
     """
     from .dedup import dedup_minhash_lsh
 
@@ -1226,24 +1099,13 @@ def dup_groups_incremental(
     new_pairs = all_pairs.filter(
         (F.col("doc_a") >= b) | (F.col("doc_b") >= b)
     )
-    prior = dup_labels_star(None, max_iter=max_iter, pairs=old_pairs)
-    labels = dup_labels_incremental_fold(prior, new_pairs, max_iter=max_iter)
-    return (
-        labels.groupBy("group_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.array_join(
-                F.sort_array(F.collect_list("src")).cast("array<string>"), ","
-            ).alias("doc_ids"),
-        )
-        .filter(F.col("n_docs") >= 2)
-    )
+    prior = dup_labels(None, pairs=old_pairs)
+    return _group_summary(dup_labels_incremental_fold(prior, new_pairs))
 
 
 def dup_groups_nightly_report(
     spark,
     sf_dir: str,
-    max_iter: int = 30,
     verify: bool = False,
     warm_state: bool = True,
 ) -> DataFrame:
@@ -1289,8 +1151,8 @@ def dup_groups_nightly_report(
     oversizes narrow ones at 100 TB).
 
     Per night the folded labels can be checked EQUAL (set equality both
-    ways) to a from-scratch D3+star recompute over the night's full
-    snapshot — the verification oracle only, ~2/3 of the runtime, so
+    ways) to a from-scratch D3 + :func:`dup_labels` recompute over the
+    night's full snapshot — the verification oracle only, ~2/3 of the runtime, so
     ``verify=False`` is the DEFAULT (production runs just the fold and
     ``fold_equals_full`` is NULL); the suite and one SCALE probe keep
     ``verify=True`` with the hard per-night assertion. Rows-only driver
@@ -1411,24 +1273,10 @@ def dup_groups_nightly_report(
                     .distinct()
                     .localCheckpoint(eager=True)
                 )
-                # The report needs the edge count anyway — counting the
-                # checkpoint FIRST (one job) lets the fold dispatch on a
-                # KNOWN size: a direct single-job collect under the gate
-                # instead of star's incremental take probe.
                 n_edges = delta_edges.count()
-                if n_edges <= DRIVER_CC_EDGE_MAX:
-                    folded = _dup_labels_driver(
-                        spark,
-                        delta_edges.collect(),
-                        delta_edges.schema[0].dataType.simpleString(),
-                    ).localCheckpoint(eager=True)
-                else:
-                    folded = dup_labels_star(
-                        None,
-                        max_iter=max_iter,
-                        pairs=delta_edges,
-                        pairs_distinct=True,
-                    ).localCheckpoint(eager=True)
+                folded = dup_labels(None, pairs=delta_edges).localCheckpoint(
+                    eager=True
+                )
             else:
                 stored = (
                     stored_mirror
@@ -1487,7 +1335,6 @@ def dup_groups_nightly_report(
                 folded = dup_labels_incremental_fold(
                     prior,
                     delta_edges,
-                    max_iter=max_iter,
                     # both sizes are already known (last night's label
                     # stats + this night's edge count) — the fold skips
                     # its take probes entirely.
@@ -1539,10 +1386,8 @@ def dup_groups_nightly_report(
                 )
                 prior_mirror = folded
             if verify:
-                full = dup_labels_star(
-                    None,
-                    max_iter=max_iter,
-                    pairs=pairs_over(read_snapshot(spark, docs_tbl, v)),
+                full = dup_labels(
+                    None, pairs=pairs_over(read_snapshot(spark, docs_tbl, v))
                 )
                 equal = label_sets_equal(folded, full)
                 if not equal:

@@ -1160,25 +1160,18 @@ def embedding_dup_groups(embeddings: DataFrame) -> DataFrame:
     not the group minimum. Scale shape inherited wholesale: the edge list
     (≪ corpus) comes from D8's Arrow Gram-matrix scorer — bit-identical
     pairs to the declarative D5 (asserted in tests), ~5× faster measured —
-    and the shared min-label propagation (pipeline.dup_labels) converges
-    in near-clique time over that edge list alone.
+    and the shared connected components (pipeline.dup_labels: a driver
+    union-find under its edge gate, star rounds above it) run over
+    that edge list alone.
     """
-    from .pipeline import dup_labels
+    from .pipeline import _group_summary, dup_labels
 
     pairs = embedding_near_dups_blas(embeddings).select(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
     )
-    labels = dup_labels(None, pairs=pairs)
     return (
-        labels.groupBy("group_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.array_join(
-                F.sort_array(F.collect_list("src")).cast("array<string>"), ","
-            ).alias("vec_ids"),
-        )
-        .filter(F.col("n_vecs") >= 2)
-        # min-label CC labels every component with its minimum member, so
+        _group_summary(dup_labels(None, pairs=pairs), "n_vecs", "vec_ids")
+        # dup_labels labels every component with its minimum member, so
         # the canonical survivor IS the group id — stated once, not
         # re-aggregated as a second always-equal column.
         .select(

@@ -406,7 +406,8 @@ JOIN banded_pairs USING (doc_a, doc_b)
 def closure_ctes(pair_cte: str) -> str:
     """edges/reach/labels connected-components CTE trio over a named pair
     CTE with (doc_a, doc_b) columns — ONE definition of the transitive
-    closure + min-label rule, consumed by the P4/P5 (mh_pairs), P11
+    closure + component-minimum label rule (what ``pipeline.dup_labels``
+    emits on the Spark side), consumed by the P4/P5 (mh_pairs), P11
     (banded_pairs) and D16 (cos_pairs) oracles. Requires the enclosing
     WITH to be RECURSIVE."""
     return f""",

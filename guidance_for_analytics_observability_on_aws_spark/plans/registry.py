@@ -524,11 +524,13 @@ _register(
     PIPELINE_ORACLES["dedup_eval_report"],
 )
 
-# P15 computes P4's exact groups by the O(log diameter) star algorithm, so
-# it SHARES P4's recursive-CTE oracle (equality also pinned in tests).
+# P15 is an alias of P4: P4 itself runs the O(log diameter) star algorithm
+# (above a driver union-find gate), so this id calls dup_groups and SHARES
+# its recursive-CTE oracle; the id stays so driver windows and bench lists
+# stay valid.
 _register(
     "dup_groups_star",
-    lambda s, d: pipeline.dup_groups_star(load_tables(s, d)["documents"]),
+    lambda s, d: pipeline.dup_groups(load_tables(s, d)["documents"]),
     PIPELINE_ORACLES["dup_groups"],
 )
 

@@ -1,7 +1,7 @@
 """SparkSession factory tuned for the observability/analytics workload.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]``; the same settings are the
-ones we would ship for a multi-executor cluster (AQE on, sane shuffle
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the host's CPU
+count); the same settings are the ones we would ship for a multi-executor cluster (AQE on, sane shuffle
 partitioning, Arrow for the few Pandas-UDF paths).
 """
 
@@ -13,7 +13,7 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app_name: str = "analytics-observability-spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     builder = (
         SparkSession.builder.master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
         .appName(app_name)

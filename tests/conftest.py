@@ -26,8 +26,10 @@ FAST_ORACLE_SPOTS = {
     "dedup_containment_banded",    # D: candidate-restricted exact scoring
     "similarity_eval_report",      # D: concurrent-materialization report
     "dup_groups",                  # P: CC over the candidate graph
+    "embedding_dup_groups",        # D: CC over the embedding pair graph
     "dedup_eval_report",           # P: the composed grading report
     "corpus_curation_pipeline",    # P: the funnel
+    "corpus_curation_pipeline_v2", # P: the funnel over banded pairs
     "text_token_count",            # X
     "mm_shard_manifest",           # M
 }

@@ -1245,43 +1245,73 @@ def test_vocab_coverage_monotone(spark, sf_dir):
         assert out.coverage.iloc[-1] == 1.0
 
 
-def test_star_cc_matches_min_label_and_handles_long_paths(spark, sf_dir):
-    """P15: the star algorithm's groups equal P4's min-label groups on
-    the real corpus, and on a planted 64-node PATH (diameter 63 — the
-    shape min-label propagation needs ~diameter rounds for) it converges
-    within the round budget and returns one component."""
-    from guidance_for_analytics_observability_on_aws_spark.operators.pipeline import (
-        dup_groups,
-        dup_groups_star,
-        dup_labels_star,
+def test_cc_driver_matches_distributed_and_handles_long_paths(
+    spark, sf_dir, monkeypatch
+):
+    """P4/P15: dup_labels' two physical paths — the driver union-find
+    under DRIVER_CC_EDGE_MAX and the distributed large-star/small-star
+    loop above it — emit identical labels on the real corpus's LSH pairs
+    and on a planted 64-node PATH (diameter 63), which the distributed
+    loop resolves into one component within 10 rounds."""
+    from guidance_for_analytics_observability_on_aws_spark.operators import pipeline
+    from guidance_for_analytics_observability_on_aws_spark.operators.dedup import (
+        dedup_minhash_lsh,
     )
     from guidance_for_analytics_observability_on_aws_spark.sources.tables import load_tables
 
     docs = load_tables(spark, sf_dir)["documents"]
-    a = {r.group_id: r.doc_ids for r in dup_groups(docs).collect()}
-    b = {r.group_id: r.doc_ids for r in dup_groups_star(docs).collect()}
-    assert a == b
-    # planted path 0-1-2-...-63: the DISTRIBUTED star loop (forced past
-    # the r14 driver union-find gate) must resolve it in <= 10 rounds
-    # (log2(64)=6 plus slack), where min-label would need ~63.
+    lsh = dedup_minhash_lsh(docs).select("doc_a", "doc_b").localCheckpoint(eager=True)
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "doc_a long, doc_b long"
     )
-    dist = {
-        tuple(r)
-        for r in dup_labels_star(
-            None, max_iter=10, pairs=path, driver_max_edges=0
-        ).collect()
-    }
-    labels = dict(dist)
-    assert set(labels) == set(range(64))
-    assert set(labels.values()) == {0}
-    # the driver union-find fast path is label-identical to the loop
-    drv = {
-        tuple(r)
-        for r in dup_labels_star(None, max_iter=10, pairs=path).collect()
-    }
-    assert drv == dist
+
+    def labels(pairs):
+        return {tuple(r) for r in pipeline.dup_labels(None, pairs=pairs).collect()}
+
+    drv_lsh, drv_path = labels(lsh), labels(path)
+    assert drv_lsh
+    # force the distributed loop; log2(64)=6 rounds plus slack
+    monkeypatch.setattr(pipeline, "DRIVER_CC_EDGE_MAX", 0)
+    monkeypatch.setattr(pipeline, "CC_MAX_ROUNDS", 10)
+    dist_path = labels(path)
+    assert dict(dist_path).keys() == set(range(64))
+    assert set(dict(dist_path).values()) == {0}
+    assert drv_path == dist_path
+    assert drv_lsh == labels(lsh)
+
+
+def test_cc_distributed_loop_raises_at_round_cap(spark, monkeypatch):
+    """A star loop still changing at CC_MAX_ROUNDS must raise, never
+    return the split groups of an unconverged edge set."""
+    from guidance_for_analytics_observability_on_aws_spark.operators import pipeline
+
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "doc_a long, doc_b long"
+    )
+    monkeypatch.setattr(pipeline, "DRIVER_CC_EDGE_MAX", 0)
+    monkeypatch.setattr(pipeline, "CC_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="still changing"):
+        pipeline.dup_labels(None, pairs=path)
+
+
+def test_cc_empty_edge_list_yields_typed_empty_labels(spark):
+    """An empty edge list (e.g. a night with no near-dups) labels nothing
+    — zero rows with the bigint (src, group_id) schema — both from
+    dup_labels and from folding empty new pairs into an empty prior."""
+    from guidance_for_analytics_observability_on_aws_spark.operators.pipeline import (
+        dup_labels,
+        dup_labels_incremental_fold,
+    )
+
+    no_pairs = spark.createDataFrame([], "doc_a bigint, doc_b bigint")
+    want = "struct<src:bigint,group_id:bigint>"
+    labels = dup_labels(None, pairs=no_pairs)
+    assert labels.schema.simpleString() == want
+    assert labels.collect() == []
+    for sizes in (None, (0, 0)):
+        folded = dup_labels_incremental_fold(labels, no_pairs, known_sizes=sizes)
+        assert folded.schema.simpleString() == want
+        assert folded.collect() == []
 
 
 def test_pq_planted_copy_and_ranking_signal(spark, sf_dir):
@@ -2027,15 +2057,16 @@ def test_dup_groups_incremental_equals_full_recompute(spark, sf_dir):
     assert inc == full and inc
 
 
-def test_dup_labels_incremental_fold_merges_old_groups(spark):
+def test_dup_labels_incremental_fold_merges_old_groups(spark, monkeypatch):
     """The fold must handle the hard case the natural corpus may never
     exercise: ONE new doc bridging TWO distinct prior components (plus a
     previously-isolated old doc first touched by a new edge). Expected
-    labels follow min-id composition; cross-checked against star CC over
+    labels follow min-id composition; cross-checked against dup_labels over
     the union graph."""
+    from guidance_for_analytics_observability_on_aws_spark.operators import pipeline
     from guidance_for_analytics_observability_on_aws_spark.operators.pipeline import (
+        dup_labels,
         dup_labels_incremental_fold,
-        dup_labels_star,
     )
 
     old_pairs = spark.createDataFrame(
@@ -2046,14 +2077,14 @@ def test_dup_labels_incremental_fold_merges_old_groups(spark):
     new_pairs = spark.createDataFrame(
         [(2, 100), (100, 4), (7, 101), (101, 102)], "doc_a long, doc_b long"
     )
-    prior = dup_labels_star(None, pairs=old_pairs)
+    prior = dup_labels(None, pairs=old_pairs)
     folded = {
         r.src: r.group_id
         for r in dup_labels_incremental_fold(prior, new_pairs).collect()
     }
     want = {
         r.src: r.group_id
-        for r in dup_labels_star(
+        for r in dup_labels(
             None, pairs=old_pairs.unionByName(new_pairs)
         ).collect()
     }
@@ -2069,25 +2100,12 @@ def test_dup_labels_incremental_fold_merges_old_groups(spark):
             prior, new_pairs, known_sizes=(prior.count(), new_pairs.count())
         ).collect()
     }
+    monkeypatch.setattr(pipeline, "DRIVER_CC_EDGE_MAX", 0)
     dist = {
         r.src: r.group_id
-        for r in dup_labels_incremental_fold(
-            prior, new_pairs, driver_max_rows=0
-        ).collect()
+        for r in dup_labels_incremental_fold(prior, new_pairs).collect()
     }
     assert sized == folded == dist
-    # and star's pairs_distinct fast canon is label-identical to the
-    # full canonicalization over an already-distinct edge list
-    pd_labels = {
-        r.src: r.group_id
-        for r in dup_labels_star(
-            None,
-            pairs=old_pairs.unionByName(new_pairs).distinct()
-            .localCheckpoint(eager=True),
-            pairs_distinct=True,
-        ).collect()
-    }
-    assert pd_labels == want
 
 
 def test_lsh_band_salting_lossless(spark, sf_dir):
